@@ -438,10 +438,10 @@ def ivf_train(
     ``avg`` — any partition order now gives bit-identical centroids, so
     `sim_ivf_topk` carries a full DuckDB value-hash oracle instead of the
     rows-only check (output verified identical to the fp-avg path at
-    sf0.001/0.01/0.1 before the swap).  The model-sized K×dim partials
-    collect to a LocalTableScan (the r13 `kmeans_lloyd_exact` device), so
-    the training chain is also cheaper: each iteration is one bounded
-    aggregate job instead of a growing lazy plan.
+    sf0.001/0.01/0.1 before the swap).  The centroid rebuild stays a lazy
+    distributed relation — no per-iteration collect (measured ~1 s per
+    iteration slower, see `_cell_means_exact`) — so the whole iteration
+    chain executes as ONE job inside the final eager checkpoint.
     """
     if iters < 0:
         raise ValueError(f"iters must be >= 0, got {iters}")
@@ -2806,16 +2806,28 @@ def gram_partial(df: DataFrame, vec: str = "embedding", dim: int = _PCA_DIM) -> 
     merge by grouped sum) and the design absorbs that in the single
     serve-time round-6 on the total — the matmul is just another
     summation order, ~1e-12 relative from any other (parity re-verified
-    at sf0.001/0.01/0.1, plus the serve == batch suite)."""
+    at sf0.001/0.01/0.1, plus the serve == batch suite).
+
+    Input contract: every non-null vector has exactly ``dim`` non-null
+    elements.  A null element (NaN would poison the whole partial) or a
+    ragged vector (rows of 63 and 65 would silently reshape into two wrong
+    64-vectors) raises ``ValueError`` inside the kernel; a null vector
+    contributes nothing."""
     import numpy as np  # noqa: PLC0415
     import pyarrow as pa  # noqa: PLC0415
+    import pyarrow.compute as pc  # noqa: PLC0415
 
     def _gram(batches):
         acc = np.zeros((dim, dim), dtype=np.float64)
         saw = False
         for batch in batches:
             col = batch.column(0)
-            flat = col.flatten().to_numpy(zero_copy_only=False)
+            values = col.flatten()
+            if values.null_count:
+                raise ValueError(f"gram_partial: null element in {vec!r}")
+            if pc.any(pc.not_equal(col.value_lengths(), dim)).as_py():
+                raise ValueError(f"gram_partial: {vec!r} vector length is not {dim}")
+            flat = values.to_numpy(zero_copy_only=False)
             if flat.size:
                 a = flat.reshape(-1, dim)
                 acc += a.T @ a

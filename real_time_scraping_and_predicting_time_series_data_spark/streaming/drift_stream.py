@@ -18,8 +18,6 @@ the reference corpus" gates.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -29,30 +27,14 @@ from ..operators.stats import (
     mann_whitney_from_value_grid,
     psi_from_value_grid,
 )
-from .store_compaction import (
-    compact_grid_store,
-    is_compacted,
-    publish_dir,
-    read_store_grid,
-)
+from .store_compaction import GridStore, grouped_sum
 
 __all__ = ["DriftStreamMonitor"]
 
 
-
-class DriftStreamMonitor:
+class DriftStreamMonitor(GridStore):
     """Accumulates (value, count_a, count_b) grids per micro-batch and
-    serves the exact two-sample KS distance over all data seen.
-
-    Deployment assumption (ADVICE r4): ``ingest_batch`` publishes each
-    batch by a Spark parquet write into a staging path followed by a
-    DRIVER-LOCAL ``os.replace``/``shutil.rmtree`` — correct only when
-    ``store_dir`` is a filesystem shared by driver and executors (local
-    mode, NFS). On HDFS/S3 the driver-local rename would operate on the
-    wrong filesystem: port the staging-rename through the Hadoop
-    ``FileSystem`` API (``spark._jvm.org.apache.hadoop.fs.FileSystem``)
-    or publish via an atomic-commit table format (Delta/Iceberg) instead.
-    The grid math itself is storage-agnostic."""
+    serves the exact two-sample KS distance over all data seen."""
 
     def __init__(
         self,
@@ -64,8 +46,6 @@ class DriftStreamMonitor:
         group_b: str = "src1",
         value_type: str = "bigint",
     ) -> None:
-        self.spark = spark
-        self.store_dir = store_dir
         self.value_col = value_col
         self.group_col = group_col
         self.group_a = group_a
@@ -73,11 +53,12 @@ class DriftStreamMonitor:
         # explicit grid schema: typed-empty serves pre-ingest AND a stable
         # read schema for the compacted/live union (value_type follows the
         # configured value column; counts are always long)
-        self.grid_schema = f"v {value_type}, ca bigint, cb bigint"
-        os.makedirs(store_dir, exist_ok=True)
-
-    def _batch_dir(self, batch_id: int) -> str:
-        return os.path.join(self.store_dir, f"batch_id={batch_id}")
+        super().__init__(
+            spark,
+            store_dir,
+            f"v {value_type}, ca bigint, cb bigint",
+            grouped_sum(("v",), ("ca", "cb")),
+        )
 
     def batch_grid(self, df: DataFrame) -> DataFrame:
         """This batch's (v, ca, cb) value grid — same tagging as the batch
@@ -93,35 +74,6 @@ class DriftStreamMonitor:
             F.sum("a").cast("long").alias("ca"), F.sum("b").cast("long").alias("cb")
         )
 
-    def ingest_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch hook: publish this batch's grid under its batch_id
-        (staging-rename → replays overwrite, never double-count). A replay
-        of a batch already folded by `compact()` is DROPPED — its rows are
-        inside the compacted grid and re-publishing would double-count."""
-        if is_compacted(self.store_dir, batch_id):
-            return
-        publish_dir(self.batch_grid(batch_df), self.store_dir, f"batch_id={batch_id}")
-
-    def attach(self, stream_df: DataFrame, checkpoint: str):
-        return (
-            stream_df.writeStream.foreachBatch(
-                lambda df, bid: self.ingest_batch(df, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    def compact(self) -> dict:
-        """Fold every published batch grid into one `compacted_upto=<id>`
-        dir (associative grouped-sum merge → every serve statistic is
-        bit-identical before/after); bounds directory growth for
-        long-lived streams. See streaming/store_compaction.py for the
-        replay/crash-safety argument."""
-        return compact_grid_store(
-            self.spark, self.store_dir, self.grid_schema, ("v",), ("ca", "cb")
-        )
-
     def serve_grid(self) -> DataFrame:
         """The merged value grid: union of the compacted grid (if any) and
         newer per-batch grids + one grouped sum — identical to the batch
@@ -130,10 +82,7 @@ class DriftStreamMonitor:
         instead of raising PATH_NOT_FOUND — a dashboard may poll the
         monitor before ingest starts; the downstream statistics already
         define the degenerate-grid case."""
-        merged = read_store_grid(self.spark, self.store_dir, self.grid_schema)
-        return merged.groupBy("v").agg(
-            F.sum("ca").cast("long").alias("ca"), F.sum("cb").cast("long").alias("cb")
-        )
+        return self.merged()
 
     def serve_ks(self) -> DataFrame:
         """Exact KS distance over all data seen — bit-identical to

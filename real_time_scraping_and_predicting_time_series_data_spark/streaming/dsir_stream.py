@@ -14,19 +14,13 @@ exactly why the serve recomputes from the merged grid instead of
 freezing per-batch weights (a data-selection service must re-rank its
 backlog as the target distribution estimate sharpens).
 
-Stores, published per-batch via staging-rename (at-least-once replays
-overwrite their own ``batch_id=<id>`` directory — the corpus_ingest
-idempotence pattern):
+Two `GridStore` sub-directories, published per-batch via staging-rename
+(at-least-once replays overwrite their own ``batch_id=<id>`` directory —
+the corpus_ingest idempotence pattern):
 
 - ``grid/batch_id=*`` (b, cr, ct)      — tiny mergeable LM grids;
 - ``db/batch_id=*``   (doc_id, b, n)   — per-doc bucket counts (linear in
   tokens, never doc × doc).
-
-Deployment assumption (shared with DriftStreamMonitor): the driver-local
-``os.replace`` publish is correct when ``store_dir`` is a filesystem the
-driver and executors share; on HDFS/S3 port the rename through the Hadoop
-FileSystem API or an atomic-commit table format.  The grid math is
-storage-agnostic.
 """
 
 from __future__ import annotations
@@ -39,13 +33,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import md5_60
 from ..operators.corpus import _DSIR_BUCKETS, dsir_score
 from ..operators.text import words_of
-from .store_compaction import (
-    compact_grid_store,
-    compact_union_store,
-    is_compacted,
-    publish_dir,
-    read_store_grid,
-)
+from .store_compaction import GridStore, grouped_sum, start_ingest
 
 __all__ = ["DsirStreamModel"]
 
@@ -53,11 +41,6 @@ __all__ = ["DsirStreamModel"]
 class DsirStreamModel:
     """Accumulates per-batch hashed-unigram LM grids plus per-doc bucket
     counts and serves exact DSIR weights over all documents seen."""
-
-    _EMPTY = {
-        "grid": "b bigint, cr bigint, ct bigint",
-        "db": "doc_id bigint, b bigint, n bigint",
-    }
 
     def __init__(
         self,
@@ -74,16 +57,17 @@ class DsirStreamModel:
         self.buckets = buckets
         self.id_col = id_col
         self.text_col = text_col
-        for sub in ("grid", "db"):
-            os.makedirs(os.path.join(store_dir, sub), exist_ok=True)
+        self.grid = GridStore(
+            spark,
+            os.path.join(store_dir, "grid"),
+            "b bigint, cr bigint, ct bigint",
+            grouped_sum(("b",), ("cr", "ct")),
+        )
+        self.db = GridStore(
+            spark, os.path.join(store_dir, "db"), "doc_id bigint, b bigint, n bigint"
+        )
 
     # -- ingest ---------------------------------------------------------
-
-    def _publish(self, df: DataFrame, sub: str, batch_id: int) -> None:
-        sub_dir = os.path.join(self.store_dir, sub)
-        if is_compacted(sub_dir, batch_id):
-            return  # replay of a folded batch: rows already in the fold
-        publish_dir(df, sub_dir, f"batch_id={batch_id}")
 
     def ingest_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """foreachBatch hook: publish this batch's LM grid and per-doc
@@ -101,25 +85,13 @@ class DsirStreamModel:
             F.sum(F.when(F.col("is_tgt"), 1).otherwise(0)).cast("long").alias("ct"),
         )
         db = toks.groupBy("doc_id", "b").agg(F.count("*").cast("long").alias("n"))
-        self._publish(grid, "grid", batch_id)
-        self._publish(db, "db", batch_id)
+        self.grid.ingest_batch(grid, batch_id)
+        self.db.ingest_batch(db, batch_id)
 
     def attach(self, stream_df: DataFrame, checkpoint: str):
-        return (
-            stream_df.writeStream.foreachBatch(
-                lambda df, bid: self.ingest_batch(df, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+        return start_ingest(stream_df, self.ingest_batch, checkpoint)
 
     # -- serve ----------------------------------------------------------
-
-    def _read(self, sub: str) -> DataFrame:
-        return read_store_grid(
-            self.spark, os.path.join(self.store_dir, sub), self._EMPTY[sub]
-        )
 
     def compact(self) -> dict:
         """Fold both sub-stores: the LM grid by grouped sum (the
@@ -127,30 +99,16 @@ class DsirStreamModel:
         by pure union (rows disjoint across batches under the
         replay-overwrite contract).  Served weights are bit-identical
         before/after; directory growth stays bounded."""
-        return {
-            "grid": compact_grid_store(
-                self.spark,
-                os.path.join(self.store_dir, "grid"),
-                self._EMPTY["grid"],
-                ("b",),
-                ("cr", "ct"),
-            ),
-            "db": compact_union_store(
-                self.spark, os.path.join(self.store_dir, "db"), self._EMPTY["db"]
-            ),
-        }
+        return {"grid": self.grid.compact(), "db": self.db.compact()}
 
     def serve_model(self) -> DataFrame:
         """The merged (b, cr, ct) LM grid over everything ingested."""
-        return self._read("grid").groupBy("b").agg(
-            F.sum("cr").cast("long").alias("cr"),
-            F.sum("ct").cast("long").alias("ct"),
-        )
+        return self.grid.merged()
 
     def serve_weights(self) -> DataFrame:
         """DSIR weights for every ingested document under the CURRENT
         merged model — bit-identical to `corpus_dsir_weights` run as one
         batch over the same rows (shared `dsir_score` core)."""
         return dsir_score(
-            self._read("db"), self.serve_model(), buckets=self.buckets
+            self.db.merged(), self.serve_model(), buckets=self.buckets
         )

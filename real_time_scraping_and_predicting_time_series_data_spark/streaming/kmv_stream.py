@@ -19,34 +19,34 @@ folds by distinct-union-then-keep-k, empty store serves typed-empty.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_60
 from ..operators.sketch import _KMV_K
-from .store_compaction import _fold, is_compacted, publish_dir, read_store_grid
+from .store_compaction import GridStore
 
 __all__ = ["KmvStreamSketch"]
 
 _GRID_SCHEMA = "h60 bigint"
 
 
-class KmvStreamSketch:
+class KmvStreamSketch(GridStore):
     """Accumulates per-batch k-minimum-value sets and serves the exact
     whole-stream distinct sketch."""
 
     def __init__(self, spark: SparkSession, store_dir: str, k: int = _KMV_K) -> None:
-        self.spark = spark
-        self.store_dir = store_dir
         self.k = k
-        os.makedirs(store_dir, exist_ok=True)
+        super().__init__(spark, store_dir, _GRID_SCHEMA, self._recut)
+
+    def _recut(self, df: DataFrame) -> DataFrame:
+        """Distinct-union-then-keep-k — the KMV merge law."""
+        return df.select("h60").distinct().orderBy("h60").limit(self.k)
 
     def batch_grid(self, pairs_df: DataFrame) -> DataFrame:
         """This batch's sketch: the k smallest distinct hashes of the
         (l_partkey, l_suppkey) pair key."""
-        return (
+        return self._recut(
             pairs_df.select(
                 md5_60(
                     F.concat_ws(
@@ -56,42 +56,12 @@ class KmvStreamSketch:
                     )
                 ).alias("h60")
             )
-            .distinct()
-            .orderBy("h60")
-            .limit(self.k)
-        )
-
-    def ingest_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if is_compacted(self.store_dir, batch_id):
-            return
-        publish_dir(self.batch_grid(batch_df), self.store_dir, f"batch_id={batch_id}")
-
-    def compact(self) -> dict:
-        """Distinct-union-then-keep-k fold — the KMV merge law."""
-        k = self.k
-        return _fold(
-            self.spark,
-            self.store_dir,
-            _GRID_SCHEMA,
-            lambda df: df.select("h60").distinct().orderBy("h60").limit(k),
-        )
-
-    def attach(self, stream_df: DataFrame, checkpoint: str):
-        return (
-            stream_df.writeStream.foreachBatch(
-                lambda df, bid: self.ingest_batch(df, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
         )
 
     def serve_sketch(self) -> DataFrame:
         """(k, kth, kmv_estimate) over everything ingested — bit-identical
         to the batch sketch (shared order-statistic arithmetic)."""
-        merged = read_store_grid(self.spark, self.store_dir, _GRID_SCHEMA)
-        small = merged.select("h60").distinct().orderBy("h60").limit(self.k)
-        s = small.agg(
+        s = self.merged().agg(
             F.count("*").cast("long").alias("k"),
             F.max("h60").cast("long").alias("kth"),
         )

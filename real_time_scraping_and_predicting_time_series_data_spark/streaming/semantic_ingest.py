@@ -40,21 +40,16 @@ whose endpoints land in different primary cells; see
 The served invariant (test-pinned): no two served vectors SHARING A
 PROBED CELL have cosine >= tau.  At nprobe=1 this degrades to the old
 same-primary-cell contract bit-exactly (probe set = {primary cell}).
-
-Deployment assumption (shared with the other stores): driver-local
-staging-rename — correct on a driver-visible filesystem; on HDFS/S3 use
-the Hadoop FileSystem API or an atomic-commit table format.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .store_compaction import compacted_upto, is_compacted, publish_dir
+from .store_compaction import GridStore
 
 from ..catalog import ensure_min_partitions
 from ..functions.vector import as_double, dot, norm
@@ -63,7 +58,7 @@ from ..operators.similarity import ivf_probe_cells
 __all__ = ["SemanticDedupStore"]
 
 
-class SemanticDedupStore:
+class SemanticDedupStore(GridStore):
     """First-seen-wins semantically-deduplicated vector store over columns
     ``(vec_id, embedding)``."""
 
@@ -77,8 +72,7 @@ class SemanticDedupStore:
     ) -> None:
         if nprobe < 1:
             raise ValueError(f"nprobe must be >= 1, got {nprobe}")
-        self.spark = spark
-        self.root = os.path.join(store_dir, "accepted")
+        super().__init__(spark, os.path.join(store_dir, "accepted"))
         self.threshold = threshold
         self.nprobe = nprobe
         # (cell, c_nvec) seed centroids, normalized — kept as a plain local
@@ -88,71 +82,13 @@ class SemanticDedupStore:
         # joins derive their spread from it (r13, `_exploding_cell_join`).
         # One count over the eager-checkpointed K-row model is free.
         self.n_cells = self.centroids.count()
-        os.makedirs(self.root, exist_ok=True)
-
-    # -- store access -------------------------------------------------------
-
-    def _batch_dirs(self, exclude_batch_id: int | None = None) -> list[str]:
-        """Live parts: the newest compacted fold (if any) + batch dirs
-        newer than it (at-or-below-fold dirs are crash debris, ignored)."""
-        upto = compacted_upto(self.root)
-        out = []
-        if upto >= 0:
-            out.append(os.path.join(self.root, f"compacted_upto={upto}"))
-        for d in os.listdir(self.root):
-            if not d.startswith("batch_id="):
-                continue
-            if exclude_batch_id is not None and d == f"batch_id={exclude_batch_id}":
-                continue
-            if int(d.split("=", 1)[1]) <= upto:
-                continue
-            out.append(os.path.join(self.root, d))
-        return sorted(out)
-
-    def compact(self) -> dict:
-        """Union-fold every accepted batch dir into one
-        ``compacted_upto=<max>`` dir (accepted rows are disjoint across
-        batches by the admission anti-join); serve() and the ledger probe
-        are unchanged, folded-batch replays are dropped at ingest. Same
-        rename-then-sweep crash window as store_compaction."""
-        upto = compacted_upto(self.root)
-        live = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self.root)
-            if d.startswith("batch_id=") and int(d.split("=", 1)[1]) > upto
-        )
-        if not live:
-            return {"folded_batches": 0, "upto": upto}
-        new_upto = max(live)
-        merged = self.spark.read.parquet(*self._batch_dirs())
-        staging = os.path.join(self.root, f".staging_compacted_upto={new_upto}")
-        shutil.rmtree(staging, ignore_errors=True)
-        merged.write.mode("overwrite").parquet(staging)
-        os.rename(staging, os.path.join(self.root, f"compacted_upto={new_upto}"))
-        for d in os.listdir(self.root):
-            keep = d == f"compacted_upto={new_upto}"
-            stale = (
-                (d.startswith("batch_id=") and int(d.split("=", 1)[1]) <= new_upto)
-                or d.startswith("compacted_upto=")
-                or d.startswith(".staging")
-                or d.startswith("_staging")
-            )
-            if stale and not keep:
-                shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)
-        return {"folded_batches": len(live), "upto": new_upto}
-
-    def _ledger(self, exclude_batch_id: int | None = None) -> DataFrame | None:
-        dirs = self._batch_dirs(exclude_batch_id)
-        if not dirs:
-            return None
-        return self.spark.read.parquet(*dirs)
 
     def serve(self) -> DataFrame:
         """Everything accepted: (cell, vec_id, v, probe_cells) — ``cell``
         is the primary (storage) cell, ``probe_cells`` the stored probe
         set future ledger probes join through.  Empty before the first
         batch, never PATH_NOT_FOUND."""
-        led = self._ledger()
+        led = self.read()
         if led is None:
             return self.spark.createDataFrame(
                 [], "cell int, vec_id bigint, v array<double>, probe_cells array<int>"
@@ -170,9 +106,9 @@ class SemanticDedupStore:
             "cell", "vec_id", "v", "probe_cells"
         )
 
-    def ingest_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch hook: admit semantically-novel vectors,
-        idempotently per batch_id.
+    def batch_part(self, batch_df: DataFrame, batch_id: int) -> DataFrame:
+        """Admit semantically-novel vectors; the ledger probe excludes
+        this batch's own earlier attempt.
 
         r14 (VERDICT r13 item 3, guide §1.2/§4): the within-batch collapse
         — probe-cell pair enumeration, cos >= tau edges, union-by-min —
@@ -192,8 +128,6 @@ class SemanticDedupStore:
         inside the band the kernel re-evaluates Spark's exact
         left-to-right fold and HALF_UP rounding) — pinned by the replay
         oracles of both serves and the store test suite."""
-        if is_compacted(self.root, batch_id):
-            return  # replay of a folded batch: its verdicts are in the fold
         # spread first so the per-row K-dot probe fold runs at full
         # parallelism instead of on the scan's single partition (§2.1);
         # no checkpoint — `assigned` now has exactly ONE consumer (the
@@ -275,7 +209,7 @@ class SemanticDedupStore:
         # the broadcast join handles with zero exchanges on the ledger
         # side; at any ledger size the scan streams.  Arithmetic
         # unchanged: Spark's round(dot, 9) >= tau.
-        led = self._ledger(exclude_batch_id=batch_id)
+        led = self.read(exclude_batch_id=batch_id)
         if led is not None:
             np_ = reps.select(
                 F.col("vec_id"), F.col("v"), F.explode("probe_cells").alias("pc")
@@ -290,17 +224,4 @@ class SemanticDedupStore:
                 .distinct()
             )
             reps = reps.join(F.broadcast(hits), "vec_id", "left_anti")
-
-        # publish_dir's rename-aside swap (ADVICE r12): a crash mid-publish
-        # never leaves a previously successful batch's rows absent.
-        publish_dir(reps, self.root, f"batch_id={batch_id}")
-
-    def attach(self, stream_df: DataFrame, checkpoint: str):
-        return (
-            stream_df.writeStream.foreachBatch(
-                lambda df, bid: self.ingest_batch(df, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+        return reps

@@ -1,22 +1,33 @@
-"""Grid-store compaction — bounded directory growth for the mergeable-grid
-streaming stores (drift, quantile, and any `batch_id=<id>`-per-micro-batch
-grid family).
+"""Grid stores — the one idempotent per-micro-batch sink behind every
+serve == batch streaming store.
 
-Every store in the family publishes one tiny (keys → counts) grid per
-micro-batch under ``batch_id=<id>`` (staging-rename, replay-overwrite).
-Serves merge ALL batch grids with a grouped sum — correct at any moment,
-but the directory count grows with stream lifetime: a 2-second trigger is
-~43k directories/day, and at object-store scale the LISTING cost (not the
-grid bytes) eventually dominates every serve. Compaction folds everything
-published so far into ONE ``compacted_upto=<max_batch_id>`` directory.
-The grouped-sum merge is associative, so the folded grid is the same
-relation the per-batch union would have produced, and every downstream
-serve statistic is unchanged — bit-identical, for the same reason the
-stores' streaming/batch parity holds.
+The stores: ``ann_ingest``, ``bm25_stream``, ``cm_stream``,
+``corpus_ingest``, ``drift_stream``, ``experiment_stream``,
+``forecast_stream``, ``kmv_stream``, ``model_quality_stream``,
+``neardup_ingest``, ``pca_stream``, ``quantile_stream``,
+``seasonality_stream``, ``semantic_ingest``, ``sketch_stream``,
+``sprt_stream`` and ``url_frontier`` each subclass `GridStore`;
+``dfindex_stream`` and ``dsir_stream`` hold one `GridStore` per
+sub-directory.
+
+A `GridStore` is one directory, one read schema (inferred for the corpus
+family, whose rows carry the input's extra columns through) and one merge
+law — grouped sum, grouped max, union, or a custom fold such as the KMV
+re-cut.  Every micro-batch publishes one part under ``batch_id=<id>``
+(staging-rename, replay-overwrite); serves read every live part and apply
+the merge law (`GridStore.merged`) — correct at any moment, but the
+directory count grows with stream lifetime: a 2-second trigger is ~43k
+directories/day, and at object-store scale the LISTING cost (not the grid
+bytes) eventually dominates every serve.  `GridStore.compact` folds
+everything published so far into ONE ``compacted_upto=<max_batch_id>``
+directory by the same merge law.  The law is associative, so the folded
+part is the same relation the per-batch union would have produced, and
+every downstream serve statistic is unchanged — bit-identical, for the
+same reason the stores' streaming/batch parity holds.
 
 Correctness under the streaming failure model:
 
-- **Replay safety** — after a fold, serves read the compacted grid plus
+- **Replay safety** — after a fold, serves read the compacted part plus
   only batch dirs with ``id > compacted_upto``; a late at-least-once
   replay of an already-folded batch must be DROPPED at ingest
   (``is_compacted``), because its rows are inside the fold already and a
@@ -28,10 +39,12 @@ Correctness under the streaming failure model:
   same reason; readers take the max ``upto`` and the sweep removes the
   older.
 
-Same deployment assumption as the stores themselves: staging-rename is a
-driver-local ``os.replace`` — correct when ``store_dir`` is shared by
-driver and executors (local mode, NFS); on HDFS/S3 route renames through
-the Hadoop ``FileSystem`` API or an atomic-commit table format.
+Deployment assumption: the staging-rename is a driver-local
+``os.rename`` — correct when ``store_dir`` is a filesystem the driver and
+executors share (local disk in local mode, NFS).  On HDFS/S3 the rename
+must go through the Hadoop ``FileSystem`` API
+(``spark._jvm.org.apache.hadoop.fs.FileSystem``) or an atomic-commit table
+format.  The merge math itself is storage-agnostic.
 """
 
 from __future__ import annotations
@@ -40,17 +53,22 @@ import os
 import re
 import shutil
 from functools import reduce
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = [
+    "GridStore",
     "compacted_upto",
     "is_compacted",
     "publish_dir",
     "read_store_grid",
     "compact_grid_store",
     "compact_union_store",
+    "grouped_max",
+    "grouped_sum",
+    "start_ingest",
 ]
 
 _BATCH_RE = re.compile(r"^batch_id=(\d+)$")
@@ -85,9 +103,12 @@ def is_compacted(store_dir: str, batch_id: int) -> bool:
     return batch_id <= compacted_upto(store_dir)
 
 
-def publish_dir(df: DataFrame, store_dir: str, dirname: str) -> None:
-    """Stage + rename ``df`` (coalesced to one file) as ``store_dir/dirname``
-    — the idempotent publish every store in the family uses.
+def publish_dir(
+    df: DataFrame, store_dir: str, dirname: str, partition_by: tuple[str, ...] = ()
+) -> None:
+    """Stage + rename ``df`` (coalesced to one file, or partitioned by the
+    ``partition_by`` columns) as ``store_dir/dirname`` — the idempotent
+    publish every store in the family uses.
 
     Crash-safe swap (ADVICE r12): the old ``rmtree(final); rename(staging,
     final)`` order had a window where a crash deleted a previously
@@ -107,7 +128,10 @@ def publish_dir(df: DataFrame, store_dir: str, dirname: str) -> None:
     # before (re)staging, so the swap below again never leaves a gap.
     if os.path.isdir(aside) and not os.path.exists(final):
         os.rename(aside, final)
-    df.coalesce(1).write.mode("overwrite").parquet(staging)
+    if partition_by:
+        df.write.mode("overwrite").partitionBy(*partition_by).parquet(staging)
+    else:
+        df.coalesce(1).write.mode("overwrite").parquet(staging)
     shutil.rmtree(aside, ignore_errors=True)
     if os.path.exists(final):
         os.rename(final, aside)
@@ -115,10 +139,11 @@ def publish_dir(df: DataFrame, store_dir: str, dirname: str) -> None:
     shutil.rmtree(aside, ignore_errors=True)
 
 
-def _live_parts(store_dir: str) -> list[str]:
-    """The directories a serve should read: the newest compacted grid (if
-    any) + batch dirs NEWER than it. Stale dirs (older compacted grids,
-    batch dirs at or below the fold) are excluded — they are crash debris."""
+def _live_parts(store_dir: str, exclude_batch_id: int | None = None) -> list[str]:
+    """The directories a serve should read: the newest compacted part (if
+    any) + batch dirs NEWER than it, minus ``exclude_batch_id``. Stale
+    dirs (older compacted parts, batch dirs at or below the fold) are
+    excluded — they are crash debris."""
     upto = compacted_upto(store_dir)
     parts = []
     if upto >= 0:
@@ -126,20 +151,9 @@ def _live_parts(store_dir: str) -> list[str]:
     parts.extend(
         os.path.join(store_dir, f"batch_id={i}")
         for i in _batch_ids(store_dir)
-        if i > upto
+        if i > upto and i != exclude_batch_id
     )
     return parts
-
-
-def read_store_grid(spark: SparkSession, store_dir: str, schema: str) -> DataFrame:
-    """Union of every live part's rows (NOT aggregated — callers own the
-    grouped-sum merge, exactly as before compaction existed). Typed-empty
-    when nothing has published."""
-    parts = _live_parts(store_dir) if os.path.isdir(store_dir) else []
-    if not parts:
-        return spark.createDataFrame([], schema)
-    dfs = [spark.read.schema(schema).parquet(p) for p in parts]
-    return reduce(DataFrame.unionByName, dfs)
 
 
 def _sweep(store_dir: str, keep: str) -> None:
@@ -153,32 +167,138 @@ def _sweep(store_dir: str, keep: str) -> None:
             shutil.rmtree(os.path.join(store_dir, name), ignore_errors=True)
 
 
-def _fold(spark: SparkSession, store_dir: str, schema: str, transform) -> dict:
-    """Shared fold core: merge live parts via ``transform``, publish as
-    ``compacted_upto=<max live id>``, sweep everything else. A no-op fold
-    (no live batches) still sweeps crash debris."""
-    upto = compacted_upto(store_dir)
-    live_ids = [i for i in _batch_ids(store_dir) if i > upto]
-    dirs_before = len(os.listdir(store_dir)) if os.path.isdir(store_dir) else 0
-    if not live_ids:
-        if upto >= 0 or dirs_before:
-            _sweep(store_dir, f"compacted_upto={upto}")
+Merge = Callable[[DataFrame], DataFrame]
+
+
+def _union(df: DataFrame) -> DataFrame:
+    """Merge law of APPEND-ONLY stores (rows disjoint across batch dirs by
+    the replay-overwrite publish contract — postings, per-doc bases,
+    admitted documents): the merged relation is the union itself."""
+    return df
+
+
+def grouped_sum(keys: tuple[str, ...], cols: tuple[str, ...]) -> Merge:
+    """Merge law of count grids over disjoint batches: grouped SUM
+    (associative + commutative)."""
+    return lambda df: df.groupBy(*keys).agg(*[F.sum(c).alias(c) for c in cols])
+
+
+def grouped_max(keys: tuple[str, ...], cols: tuple[str, ...]) -> Merge:
+    """Merge law of per-key idempotent bits/watermarks (per-user
+    conversion bits): grouped MAX — associative, commutative AND
+    idempotent, so it tolerates even row-level duplication across parts,
+    a strictly weaker requirement than the sum's disjointness contract."""
+    return lambda df: df.groupBy(*keys).agg(*[F.max(c).alias(c) for c in cols])
+
+
+def start_ingest(stream_df: DataFrame, ingest_batch, checkpoint: str):
+    """Wire a streaming source into a store's ``ingest_batch`` hook and
+    start the query (availableNow: drain what is there, then stop)."""
+    return (
+        stream_df.writeStream.foreachBatch(ingest_batch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+class GridStore:
+    """One directory of per-micro-batch parts with a read schema and a
+    merge law.  Subclasses supply ``batch_grid`` (what one micro-batch
+    publishes) and their serve statistics over `merged`; a plain
+    ``GridStore`` publishes the relation it is handed."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        store_dir: str,
+        schema: str | None = None,
+        merge: Merge = _union,
+        partition_by: tuple[str, ...] = (),
+    ) -> None:
+        self.spark = spark
+        self.store_dir = store_dir
+        self.schema = schema
+        self.merge = merge
+        self.partition_by = partition_by
+        os.makedirs(store_dir, exist_ok=True)
+
+    def batch_grid(self, df: DataFrame) -> DataFrame:
+        """This micro-batch's part, reduced before anything is stored."""
+        return df
+
+    def batch_part(self, batch_df: DataFrame, batch_id: int) -> DataFrame:
+        """The part ``ingest_batch`` publishes for ``batch_id``.  Grid
+        stores reduce the batch alone; admission stores override this to
+        probe the ledger excluding their own earlier attempt."""
+        return self.batch_grid(batch_df)
+
+    def ingest_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        """foreachBatch hook: publish this batch's part under its batch_id
+        (staging-rename → replays overwrite, never double-count). A replay
+        of a batch already folded by `compact` is DROPPED — its rows are
+        inside the compacted part and re-publishing would double-count."""
+        if is_compacted(self.store_dir, batch_id):
+            return
+        publish_dir(
+            self.batch_part(batch_df, batch_id),
+            self.store_dir,
+            f"batch_id={batch_id}",
+            self.partition_by,
+        )
+
+    def attach(self, stream_df: DataFrame, checkpoint: str):
+        """Wire a streaming source into the store."""
+        return start_ingest(stream_df, self.ingest_batch, checkpoint)
+
+    def read(self, exclude_batch_id: int | None = None) -> DataFrame | None:
+        """Union of every live part's rows, NOT merged.  Before the first
+        publish a typed store serves a typed-empty relation, never
+        PATH_NOT_FOUND; an inferred-schema store has no type to give and
+        returns None.  Each typed part is read under its own basePath, so
+        only ``partition_by`` columns are partition-discovered."""
+        parts = _live_parts(self.store_dir, exclude_batch_id)
+        if self.schema is None:
+            return self.spark.read.parquet(*parts) if parts else None
+        if not parts:
+            return self.spark.createDataFrame([], self.schema)
+        dfs = [
+            self.spark.read.schema(self.schema).option("basePath", p).parquet(p)
+            for p in parts
+        ]
+        return reduce(DataFrame.unionByName, dfs)
+
+    def merged(self) -> DataFrame | None:
+        """The merge law over every live part — identical to the batch
+        relation over everything ingested."""
+        return self.merge(self.read())
+
+    def compact(self) -> dict:
+        """Fold every live part into one ``compacted_upto=<max live id>``
+        part by the merge law, then sweep folded batch dirs, older
+        compacted dirs and crash debris (a fold with no live batches still
+        sweeps).  Returns ``{"folded_batches", "upto", "dirs_before",
+        "dirs_after"}``."""
+        upto = compacted_upto(self.store_dir)
+        live = [i for i in _batch_ids(self.store_dir) if i > upto]
+        dirs_before = len(os.listdir(self.store_dir))
+        if live:
+            upto = max(live)
+            publish_dir(
+                self.merged(), self.store_dir, f"compacted_upto={upto}", self.partition_by
+            )
+        _sweep(self.store_dir, f"compacted_upto={upto}")
         return {
-            "folded_batches": 0,
+            "folded_batches": len(live),
             "upto": upto,
             "dirs_before": dirs_before,
-            "dirs_after": len(os.listdir(store_dir)),
+            "dirs_after": len(os.listdir(self.store_dir)),
         }
-    new_upto = max(live_ids)
-    merged = transform(read_store_grid(spark, store_dir, schema))
-    publish_dir(merged, store_dir, f"compacted_upto={new_upto}")
-    _sweep(store_dir, f"compacted_upto={new_upto}")
-    return {
-        "folded_batches": len(live_ids),
-        "upto": new_upto,
-        "dirs_before": dirs_before,
-        "dirs_after": len(os.listdir(store_dir)),
-    }
+
+
+def read_store_grid(spark: SparkSession, store_dir: str, schema: str) -> DataFrame:
+    """`GridStore.read` of a typed store directory."""
+    return GridStore(spark, store_dir, schema).read()
 
 
 def compact_grid_store(
@@ -188,31 +308,13 @@ def compact_grid_store(
     key_cols: tuple[str, ...],
     sum_cols: tuple[str, ...],
 ) -> dict:
-    """Fold all live parts into one ``compacted_upto=<max_id>`` grid by the
-    associative grouped-sum merge, then sweep folded batch dirs, older
-    compacted dirs, and crash debris. Returns ``{"folded_batches", "upto",
-    "dirs_before", "dirs_after"}``."""
-    return _fold(
-        spark,
-        store_dir,
-        schema,
-        lambda df: df.groupBy(*key_cols).agg(
-            *[F.sum(c).cast("long").alias(c) for c in sum_cols]
-        ),
-    )
+    """`GridStore.compact` of a grouped-sum store directory."""
+    return GridStore(spark, store_dir, schema, grouped_sum(key_cols, sum_cols)).compact()
 
 
-def compact_union_store(
-    spark: SparkSession,
-    store_dir: str,
-    schema: str,
-) -> dict:
-    """Fold an APPEND-ONLY store (rows disjoint across batch dirs by the
-    replay-overwrite publish contract — e.g. postings, per-doc bases) by
-    pure union, no aggregation: the fold is the same multiset the per-batch
-    union served, just in one directory. Same rename-then-sweep crash
-    window and `is_compacted` replay contract as `compact_grid_store`."""
-    return _fold(spark, store_dir, schema, lambda df: df)
+def compact_union_store(spark: SparkSession, store_dir: str, schema: str) -> dict:
+    """`GridStore.compact` of an append-only store directory."""
+    return GridStore(spark, store_dir, schema).compact()
 
 
 def compact_max_store(
@@ -222,16 +324,5 @@ def compact_max_store(
     key_cols: tuple[str, ...],
     max_cols: tuple[str, ...],
 ) -> dict:
-    """Fold all live parts by a grouped-MAX merge — for stores whose
-    per-key state is an idempotent bit/watermark (per-user conversion
-    bits, per-register HLL maxima) rather than an additive count.  Max is
-    associative, commutative AND idempotent, so this fold tolerates even
-    row-level duplication across parts, a strictly weaker requirement
-    than the sum fold's disjointness contract."""
-
-    def merge(df: DataFrame) -> DataFrame:
-        return df.groupBy(*key_cols).agg(
-            *[F.max(c).cast("long").alias(c) for c in max_cols]
-        )
-
-    return _fold(spark, store_dir, schema, merge)
+    """`GridStore.compact` of a grouped-max store directory."""
+    return GridStore(spark, store_dir, schema, grouped_max(key_cols, max_cols)).compact()

@@ -63,3 +63,33 @@ def test_pca_stream_replay_and_compaction(spark, tmp_path):
     assert sorted(map(tuple, acc.serve_pca().collect())) == want
     acc.ingest_batch(part(1), 1)  # folded replay: dropped
     assert sorted(map(tuple, acc.serve_pca().collect())) == want
+
+
+def _gram_of(spark, rows):
+    from real_time_scraping_and_predicting_time_series_data_spark.operators.similarity import (
+        gram_partial,
+    )
+
+    # one partition: every row reaches the kernel in the same Arrow batch
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>").coalesce(1)
+    return gram_partial(df).collect()
+
+
+def test_gram_partial_rejects_null_element(spark):
+    """A null element would turn into NaN and poison every partial Gram
+    entry; the kernel must refuse the batch instead."""
+    import pytest
+
+    good = [float(i) for i in range(64)]
+    bad = good[:10] + [None] + good[11:]
+    with pytest.raises(Exception, match="gram_partial: null element"):
+        _gram_of(spark, [(0, good), (1, bad)])
+
+
+def test_gram_partial_rejects_ragged_vectors(spark):
+    """Rows of 63 and 65 elements add up to 128 = 2 × 64 and would reshape
+    silently into two wrong 64-vectors; the kernel must refuse them."""
+    import pytest
+
+    with pytest.raises(Exception, match="vector length is not 64"):
+        _gram_of(spark, [(0, [1.0] * 63), (1, [1.0] * 65)])

@@ -411,3 +411,98 @@ def test_semantic_store_compaction_ledger_unchanged(spark, tmp_path):
     )
     after = sorted(r.vec_id for r in store.serve().collect())
     assert after == before + [202]
+
+
+def _plant_debris(store, upto):
+    """Crash debris a fold must sweep: a batch dir at or below the fold
+    (a copy of the fold itself, as a crash before the sweep leaves it) and
+    a half-written staging dir."""
+    shutil.copytree(
+        os.path.join(store, f"compacted_upto={upto}"), os.path.join(store, f"batch_id={upto}")
+    )
+    os.makedirs(os.path.join(store, "_staging_batch_id_9"))
+
+
+def test_corpus_store_compaction_sweeps_debris_without_live_batches(spark, tmp_path):
+    """A corpus-family fold with NO live batches still sweeps folded batch
+    dirs and staging debris, leaving only the compacted dir — the serve
+    ignored the debris before and is unchanged after."""
+    from real_time_scraping_and_predicting_time_series_data_spark.streaming.corpus_ingest import (
+        IncrementalCorpusStore,
+    )
+
+    store = IncrementalCorpusStore(spark, str(tmp_path / "store"))
+    schema = "doc_id long, text string, source string"
+    store.ingest_batch(
+        spark.createDataFrame([(1, "alpha text", "s"), (2, "beta text", "s")], schema), 0
+    )
+    store.ingest_batch(spark.createDataFrame([(3, "alpha text", "s")], schema), 1)
+    store.compact()
+    accepted = str(tmp_path / "store" / "accepted")
+    _plant_debris(accepted, 1)
+    assert sorted(r.doc_id for r in store.serve().collect()) == [1, 2]
+
+    rep = store.compact()
+    assert rep["folded_batches"] == 0 and rep["upto"] == 1
+    assert _dirs(accepted) == ["compacted_upto=1"]
+    assert sorted(r.doc_id for r in store.serve().collect()) == [1, 2]
+
+
+def test_ivf_index_compaction_keeps_cell_layout_and_sweeps_debris(spark, tmp_path):
+    """The IVF fold writes ``compacted_upto=N/cell=C/`` (pruned probes
+    still work on the fold), and a fold with no live batches sweeps crash
+    debris down to that one directory."""
+    from real_time_scraping_and_predicting_time_series_data_spark.streaming.ann_ingest import (
+        IvfStreamIndex,
+        seed_centroids,
+    )
+
+    emb = load_table(spark, SF, "embeddings")
+    store = str(tmp_path / "store")
+    idx = IvfStreamIndex(spark, store, seed_centroids(emb, 16))
+    idx.ingest_batch(emb.filter(F.col("vec_id") % 2 == 0), batch_id=0)
+    idx.ingest_batch(emb.filter(F.col("vec_id") % 2 == 1), batch_id=1)
+    n = idx.corpus().count()
+    idx.compact()
+    _plant_debris(store, 1)
+
+    rep = idx.compact()
+    assert rep["folded_batches"] == 0
+    assert _dirs(store) == ["compacted_upto=1"]
+    fold = os.listdir(os.path.join(store, "compacted_upto=1"))
+    assert len([d for d in fold if d.startswith("cell=")]) > 1
+    assert idx.corpus().count() == n == emb.count()
+
+
+def test_store_scaffolding_lives_only_in_store_compaction():
+    """Guard: the idempotent-sink scaffolding (foreachBatch wiring, the
+    staging-rename publish, fold bookkeeping, raw renames) is written once,
+    in store_compaction.py.  pipeline.py (the reference pipeline) and
+    continuous_agg.py (a generation layout) keep their own sinks."""
+    import ast
+
+    from real_time_scraping_and_predicting_time_series_data_spark import streaming
+
+    allowed = {"store_compaction.py", "pipeline.py", "continuous_agg.py"}
+    banned = {"foreachBatch", "publish_dir", "compacted_upto"}
+    root = os.path.dirname(streaming.__file__)
+    offenders = []
+    for name in sorted(os.listdir(root)):
+        if not name.endswith(".py") or name in allowed:
+            continue
+        with open(os.path.join(root, name)) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func
+            called = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+            is_os_rename = (
+                isinstance(fn, ast.Attribute)
+                and fn.attr in ("rename", "replace")
+                and isinstance(fn.value, ast.Name)
+                and fn.value.id == "os"
+            )
+            if called in banned or is_os_rename:
+                offenders.append(f"{name}:{node.lineno} {called}")
+    assert offenders == []

@@ -925,8 +925,10 @@ def q_sim_ivf_seeded(spark, sf_dir):
 # grows N^1.5; restoring linearity at extreme N is the NEXT rung —
 # vectorized assignment (`ivf_assign_gemm`) or hierarchical coarse
 # quantization shrink `a` so the linear-K rule wins again (documented in
-# the serve docstrings; the GEMM path is not bit-safe against the fold,
-# so oracle-bearing serves stay on the fold arithmetic).
+# the serve docstrings).  The GEMM path is not bit-safe against the fold:
+# `sim_topk_relation_gemm`'s hash oracle relies on no numpy dot landing
+# within ~1e-15 of a round-9 boundary at the tested scales, pinned by
+# tests/test_r13_operators.py; the band guard is ROADMAP direction 3.
 _CELL_TARGET = 125
 _CELL_FLOOR = 4
 _CELL_SQRT_C = 0.4
@@ -4520,8 +4522,10 @@ def ivf_assign_gemm(
     (d9, cell)).  NOT bit-safe against the HOF fold (numpy reduces the dot
     in a different order, so a distance landing within ~1e-15 of a round-9
     boundary can flip) — this is the PERF path for big-K production
-    assignment; oracle-bearing queries keep the fold.  Agreement at test
-    scale is pinned by tests/test_r11_operators.py.
+    assignment.  An oracle on a GEMM serve relies on no dot landing that
+    close to a boundary at the tested scales; there is no band guard yet
+    (ROADMAP direction 3).  Agreement at test scale is pinned by
+    tests/test_r11_operators.py.
 
     Returns (id_col, cell int)."""
     import numpy as np  # noqa: PLC0415
@@ -4571,7 +4575,8 @@ def _gemm_cell_rows(
     score without re-joining the source relation.  Decision rule matches
     the fold serves — order by (round(−v·c_nvec, 9), cell) — via a stable
     argsort over the ascending-cell column order; same bit-safety caveat
-    as :func:`ivf_assign_gemm`.  Returns (id, cell int, rn int, vec)."""
+    and boundary assumption as :func:`ivf_assign_gemm`.  Returns
+    (id, cell int, rn int, vec)."""
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
 
@@ -4630,10 +4635,11 @@ def ivf_topk_relation_gemm(
     same Catalyst shuffle-hash-on-cell + window plan as the fold path.
 
     Bit-safety: numpy reduces dots in a different order than the fold, so
-    a distance within ~1e-15 of a round-9 boundary can flip a cell — this
-    is the PERF serving path; oracle-bearing serves keep the fold.
-    Agreement with `ivf_topk_relation` at test scale is pinned by
-    tests/test_r13_operators.py."""
+    a distance within ~1e-15 of a round-9 boundary can flip a cell.
+    `sim_topk_relation_gemm` still carries a full hash oracle: it relies
+    on no dot landing that close to a boundary at the tested scales.
+    Agreement with `ivf_topk_relation` is pinned by
+    tests/test_r13_operators.py; the band guard is ROADMAP direction 3."""
     c = corpus.select(F.col(id_col).alias("neighbor_id"), as_double(F.col(vec)).alias("v_c"))
     c = c.withColumn("_n", norm(F.col("v_c"))).select(
         "neighbor_id", F.transform("v_c", lambda x: x / F.col("_n")).alias("v_c")

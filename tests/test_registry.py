@@ -2,8 +2,12 @@
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import pytest
 
+from real_time_scraping_and_predicting_time_series_data_spark.plans import registry
 from real_time_scraping_and_predicting_time_series_data_spark.plans.registry import all_queries
 from real_time_scraping_and_predicting_time_series_data_spark.testing.parity import (
     duckdb_connection,
@@ -42,37 +46,37 @@ def test_query_parity_smoke(spark, oracle_con, name):
     assert res.ok, f"{name}: {res.detail}"
 
 
-def test_front_load_names_all_resolve():
-    """Every registry front-load name must name a REGISTERED query:
-    unknown names are skipped 'harmlessly' at serve time, which means a
-    typo would silently drop a query from the driver's correctness
-    window — exactly the evidence gap the front-load exists to close."""
-    from real_time_scraping_and_predicting_time_series_data_spark.plans.registry import (
-        _FRONT,
-        all_queries,
-    )
-
-    qs = all_queries()
-    missing = [n for n in _FRONT if n not in qs]
-    assert missing == []
+def test_registry_order_is_registration_order():
+    assert list(all_queries()) == list(registry.QUERIES)
 
 
-def test_bench_covers_every_oracle_bearing_query():
-    """bench.py's coverage-by-construction contract: the planned bench
-    list is HEADLINE plus every oracle-bearing registry query — so a new
-    oracle-checked operator can never silently skip the benchmark."""
+def _literal_query_lists(path: Path, names: set[str]) -> list[str]:
+    """Module-level assignments holding a list, tuple, set or frozenset
+    literal with two or more strings that name registered queries."""
+    found = []
+    for node in ast.parse(path.read_text()).body:
+        if not isinstance(node, (ast.Assign, ast.AnnAssign)) or node.value is None:
+            continue
+        for sub in ast.walk(node.value):
+            if isinstance(sub, (ast.List, ast.Tuple, ast.Set)):
+                hits = [
+                    e.value
+                    for e in sub.elts
+                    if isinstance(e, ast.Constant) and e.value in names
+                ]
+                if len(hits) >= 2:
+                    found.append(f"{path.name}:{node.lineno}")
+                    break
+    return found
+
+
+def test_no_hand_kept_query_lists():
+    """Bench order and registry order follow the registry itself: neither
+    bench.py nor the registry may keep its own list of query names."""
     import bench
 
-    from real_time_scraping_and_predicting_time_series_data_spark.plans.registry import (
-        all_queries,
-    )
-
-    qs = all_queries()
-    names = [n for n in bench.HEADLINE if n in qs]
-    listed = set(names)
-    names += sorted(
-        n for n, q in qs.items() if q.oracle is not None and n not in listed
-    )
-    oracle_bearing = {n for n, q in qs.items() if q.oracle is not None}
-    assert oracle_bearing <= set(names)
-    assert len(names) == len(set(names))
+    names = set(QUERIES)
+    found = []
+    for mod in (bench, registry):
+        found += _literal_query_lists(Path(mod.__file__), names)
+    assert found == []
